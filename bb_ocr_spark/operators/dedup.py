@@ -36,7 +36,10 @@ MERSENNE31_D = (1 << 31) - 1
 # dedup exchange to full width (see comment at the use site); between
 # the measured regimes: 0.6 MB (pin loses 2.5 s) and 5.9 MB (pin wins
 # ~2 s) on this host
-_MINHASH_PIN_BYTES = int(os.environ.get("BB_OCR_MINHASH_PIN_BYTES", str(2 << 20)))
+try:  # a malformed env value falls back to the default
+    _MINHASH_PIN_BYTES = int(os.environ.get("BB_OCR_MINHASH_PIN_BYTES", 2 << 20))
+except ValueError:
+    _MINHASH_PIN_BYTES = 2 << 20
 
 
 def normalized_text_col(text: Column) -> Column:

@@ -12,24 +12,26 @@ Layout (plain parquet standing in for Iceberg — jars not in this image;
 
     <output_dir>/results/run_id=<run>/   doc_id, spans, checksum, part_id
     <output_dir>/metrics/run_id=<run>/   per-partition lineage rows
+    <output_dir>/snapshots/              manifest chain (plans/snapshots.py)
 
-Commit protocol: results are written first (Spark's file-commit makes the
-run directory appear atomically on rename); metrics are then derived from a
-COLUMN-PRUNED re-scan of the committed results (doc_id/checksum/part_id
-only — a tiny fraction of the bytes), so lineage always reflects durable
-data — a crash between the two writes leaves committed results that the
-next run's metrics pass will simply re-derive. Resume reads doc_id across
-all committed run dirs; the anti-join is a plain equi-join Catalyst
-executes as sort-merge (or broadcast when the completed set is small).
+Commit protocol: a run writes its results dir, then its metrics dir, then
+appends its run_id to the snapshot manifest. That append is the ONE commit
+point: resume, read_results, read_metrics and the time-travel readers all
+read exactly the runs the current manifest lists. A run that crashes
+before the append is invisible to all of them and the next run
+re-extracts its docs; its directories stay behind as orphans.
 
-Per-task wall time comes from a SparkListener scoped to the commit job's
-job group (plans/task_metrics.py) — the scheduler's own TaskEnd durations,
-joined onto the lineage rows by partition id; the run-level wall clock is
-kept alongside (and is the fallback when the listener cannot attach).
+Lineage is one per-partition aggregate over the committed results files,
+collected in one job; the run's doc count and checksum fold from its
+rows. Per-task wall time is the write stage's task durations from Spark's
+status store (plans/task_metrics.py), next to the run-level clock.
 """
 
 from __future__ import annotations
 
+import datetime
+import functools
+import operator
 import os
 import time
 import uuid
@@ -38,36 +40,39 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extract import checksum_spans_col, extract_inline
-from .snapshots import commit_snapshot
+from .snapshots import commit_snapshot, current_snapshot
 from .task_metrics import per_task_durations
 
 RESULTS = "results"
 METRICS = "metrics"
 
+_METRICS_SCHEMA = (
+    "part_id int, doc_id_min string, doc_id_max string, n_docs bigint, "
+    "n_spans bigint, checksum bigint, wall_time_ms int, "
+    "committed_at timestamp, task_wall_ms bigint"
+)
 
-def _results_root(output_dir: str) -> str:
-    return os.path.join(output_dir, RESULTS)
+
+def _read_committed(
+    spark: SparkSession, output_dir: str, table: str, snap: dict | None
+) -> DataFrame:
+    """The `table` run dirs the manifest `snap` lists, with `run_id` kept
+    as a column (basePath). Listed runs without a dir of this table are
+    skipped: streaming epochs and runs with no new docs write no metrics.
+    Raises AnalysisException when no dir is left."""
+    root = os.path.join(output_dir, table)
+    dirs = [os.path.join(root, f"run_id={r}") for r in (snap or {}).get("run_ids", [])]
+    return spark.read.option("basePath", root).parquet(
+        *[d for d in dirs if os.path.isdir(d)]
+    )
 
 
 def completed_doc_ids(spark: SparkSession, output_dir: str) -> DataFrame | None:
-    """doc_ids already extracted across all COMMITTED runs (None if none).
-
-    Only run dirs carrying the job-commit marker (_SUCCESS) count: a run
-    that crashed between task and job commit must look incomplete so its
-    docs are re-extracted, never silently skipped. (With Iceberg this is
-    the snapshot boundary; on plain files the marker plays that role.)"""
-    root = _results_root(output_dir)
-    if not os.path.isdir(root):  # first run (local FS; catalog check on Iceberg)
+    """doc_ids of every run the current snapshot lists (None if none)."""
+    snap = current_snapshot(output_dir)
+    if snap is None:
         return None
-    committed = [
-        os.path.join(root, d)
-        for d in os.listdir(root)
-        if d.startswith("run_id=")
-        and os.path.exists(os.path.join(root, d, "_SUCCESS"))
-    ]
-    if not committed:
-        return None
-    return spark.read.parquet(*committed).select("doc_id")
+    return _read_committed(spark, output_dir, RESULTS, snap).select("doc_id")
 
 
 def run_extract_job(
@@ -78,16 +83,17 @@ def run_extract_job(
 ) -> dict:
     """Extract all not-yet-completed docs; commit results + lineage.
 
-    Returns run stats {run_id, n_docs, wall_ms, resumed_skipped}.
+    Returns run stats {run_id, n_docs, wall_ms, resumed_skipped,
+    snapshot_id}; resumed_skipped is the doc count already committed.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
     t0 = time.monotonic()
 
-    done = completed_doc_ids(spark, output_dir)
+    parent = current_snapshot(output_dir)
     remaining = documents_interleaved
-    skipped = 0
-    if done is not None:
+    if parent is not None:
         # resume: left-anti on completed ids (J6 / north_rule)
+        done = _read_committed(spark, output_dir, RESULTS, parent).select("doc_id")
         remaining = documents_interleaved.join(done, "doc_id", "left_anti")
 
     extracted = (
@@ -96,66 +102,61 @@ def run_extract_job(
         .withColumn("part_id", F.spark_partition_id())
     )
 
-    run_results = os.path.join(_results_root(output_dir), f"run_id={run_id}")
+    run_results = os.path.join(output_dir, RESULTS, f"run_id={run_id}")
     with per_task_durations(spark, f"extract-commit-{run_id}") as task_ms:
         extracted.write.mode("errorifexists").parquet(run_results)
 
-    # lineage from the COMMITTED files, light columns only (column pruning
-    # keeps this scan tiny relative to the span payload)
-    committed = spark.read.parquet(run_results).select(
-        "doc_id", "checksum", "part_id", F.size("spans").alias("n_spans")
-    )
-    wall_ms = int((time.monotonic() - t0) * 1000)
-    metrics = (
-        committed.groupBy("part_id")
+    # lineage from the COMMITTED files, light columns only; xor is
+    # order-insensitive and cannot overflow
+    parts = (
+        spark.read.parquet(run_results)
+        .groupBy("part_id")
         .agg(
             F.min("doc_id").alias("doc_id_min"),
             F.max("doc_id").alias("doc_id_max"),
             F.count("*").alias("n_docs"),
-            F.sum("n_spans").alias("n_spans"),
-            # order-insensitive partition checksum (xor: no ANSI overflow)
+            F.sum(F.size("spans")).alias("n_spans"),
             F.expr("bit_xor(checksum)").alias("checksum"),
         )
-        .withColumn("wall_time_ms", F.lit(wall_ms))
-        .withColumn("committed_at", F.current_timestamp())
+        .collect()
     )
-    if task_ms:
-        # scheduler-reported per-task duration for the commit job, joined
-        # by partition index (narrow plan: write-task index == part_id);
-        # the tiny map is broadcast
-        tm = spark.createDataFrame(
-            [(int(k), int(v)) for k, v in task_ms.items()],
-            "part_id int, task_wall_ms bigint",
-        )
-        metrics = metrics.join(F.broadcast(tm), "part_id", "left")
-    else:  # listener unavailable: keep schema stable
-        metrics = metrics.withColumn("task_wall_ms", F.lit(None).cast("bigint"))
-    # run_id comes from the partition directory on read-back (a literal
-    # column here would collide with the inferred partition column)
-    run_metrics = os.path.join(output_dir, METRICS, f"run_id={run_id}")
-    metrics.write.mode("errorifexists").parquet(run_metrics)
+    if parts:  # a run with no new docs has no lineage rows
+        import pyarrow as pa  # noqa: PLC0415
 
-    n_docs = committed.count()
-    if done is not None:
-        skipped = done.count()
-    # snapshot commit (Iceberg-analog): manifest chains to the parent and
-    # manifests publish via an os.link CAS; readers resolve the max
-    # on-disk manifest (CURRENT is a debug hint only) — time-travel readers see
-    # exactly the runs committed at a snapshot (plans/snapshots.py)
-    run_ck = committed.selectExpr("bit_xor(checksum)").collect()[0][0]
-    snap = commit_snapshot(output_dir, run_id, n_docs, run_ck or 0)
+        run = {
+            "wall_time_ms": int((time.monotonic() - t0) * 1000),
+            "committed_at": datetime.datetime.now(datetime.timezone.utc),
+        }
+        rows = [
+            {**p.asDict(), **run, "task_wall_ms": task_ms.get(p["part_id"])}
+            for p in parts
+        ]
+        # an Arrow table becomes a JVM-side relation; a list of tuples is
+        # converted by a Python worker, measured at 4x the time on a
+        # 4-core VM. run_id comes from the partition directory on
+        # read-back (a literal column would collide with the inferred one)
+        run_metrics = os.path.join(output_dir, METRICS, f"run_id={run_id}")
+        spark.createDataFrame(pa.Table.from_pylist(rows), _METRICS_SCHEMA).coalesce(
+            1
+        ).write.mode("errorifexists").parquet(run_metrics)
+
+    n_docs = sum(p["n_docs"] for p in parts)
+    run_ck = functools.reduce(operator.xor, (p["checksum"] for p in parts), 0)
+    snap = commit_snapshot(output_dir, run_id, n_docs, run_ck)
     return {
         "run_id": run_id,
         "n_docs": n_docs,
         "wall_ms": int((time.monotonic() - t0) * 1000),
-        "resumed_skipped": skipped,
+        "resumed_skipped": parent["n_docs_total"] if parent else 0,
         "snapshot_id": snap["snapshot_id"],
     }
 
 
 def read_results(spark: SparkSession, output_dir: str) -> DataFrame:
-    return spark.read.parquet(_results_root(output_dir))
+    """Every committed run's results (the current snapshot's runs)."""
+    return _read_committed(spark, output_dir, RESULTS, current_snapshot(output_dir))
 
 
 def read_metrics(spark: SparkSession, output_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(output_dir, METRICS))
+    """Lineage rows of every committed run that wrote them."""
+    return _read_committed(spark, output_dir, METRICS, current_snapshot(output_dir))

@@ -16,8 +16,9 @@ image lacks — `sources.tables.have_iceberg` gates the real binding):
                                            resolve the max manifest
 
 Time travel = read exactly the run dirs a manifest lists. A run directory
-that crashed before its snapshot commit is invisible to snapshot readers
-(and the resume anti-join already ignores it via the _SUCCESS marker).
+that crashed before its snapshot commit is invisible to snapshot readers,
+and to the extraction job's resume and readers, which key off the current
+manifest too (plans/extract_job.py).
 """
 
 from __future__ import annotations

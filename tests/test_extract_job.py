@@ -4,6 +4,10 @@ metrics cover every result partition."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
+
 from bb_ocr_spark import datagen
 from bb_ocr_spark.plans.extract_job import (
     read_metrics,
@@ -50,7 +54,7 @@ def test_resume_and_lineage(spark, tmp_path):
     total_ck = res.selectExpr("bit_xor(checksum)").collect()[0][0]
     m_ck = m.selectExpr("bit_xor(checksum)").collect()[0][0]
     assert total_ck == m_ck
-    # per-task wall time from the SparkListener: present on every lineage
+    # per-task wall time from the status store: present on every lineage
     # row in local mode, positive, and no larger than the run-level clock
     tk = m.select("task_wall_ms", "wall_time_ms").collect()
     assert all(r["task_wall_ms"] is not None for r in tk)
@@ -67,8 +71,6 @@ def test_noop_rerun(spark, tmp_path):
 
 
 def test_snapshot_time_travel(spark, tmp_path):
-    import os
-
     from bb_ocr_spark.plans.snapshots import current_snapshot, read_results_as_of
 
     out = str(tmp_path / "job")
@@ -103,3 +105,102 @@ def test_jsonl_ingestion(spark, tmp_path):
     rows = {r["doc_id"]: r for r in df.collect()}
     assert rows["a"]["text"] == "hello world" and rows["b"]["lang"] == "de"
     assert df.count() == 3 and df.filter("text IS NULL").count() == 1
+
+
+def _rows_and_ids(df) -> tuple[int, int]:
+    from pyspark.sql import functions as F
+
+    return tuple(df.agg(F.count("*"), F.countDistinct("doc_id")).collect()[0])
+
+
+class _Crash(RuntimeError):
+    pass
+
+
+def _inject_crash(monkeypatch, job, point: str) -> None:
+    """Make the next run_extract_job die at `point` of its commit."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    write, commit = DataFrameWriter.parquet, job.commit_snapshot
+
+    def parquet(self, path, *a, **kw):
+        if point == "after_results" and f"{os.sep}metrics{os.sep}" in path:
+            raise _Crash(path)  # results dir complete, metrics write fails
+        write(self, path, *a, **kw)
+        if point == "mid_results":  # some part files landed, no _SUCCESS
+            os.remove(os.path.join(path, "_SUCCESS"))
+            part = min(f for f in os.listdir(path) if f.startswith("part-"))
+            os.remove(os.path.join(path, part))
+            raise _Crash(path)
+
+    def commit_snapshot(*a, **kw):
+        if point == "after_metrics":
+            raise _Crash(point)
+        commit(*a, **kw)
+        raise _Crash(point)  # after_snapshot: dies right after the commit
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    monkeypatch.setattr(job, "commit_snapshot", commit_snapshot)
+
+
+@pytest.mark.parametrize(
+    "point", ["mid_results", "after_results", "after_metrics", "after_snapshot"]
+)
+def test_crash_window_resume(spark, tmp_path, monkeypatch, point):
+    """A run that dies at any point of its commit, then a resume with a
+    new run_id: every doc exactly once in both the resume view and the
+    snapshot view, lineage sums to N, and the resume accounts for all N."""
+    from pyspark.sql import functions as F
+
+    from bb_ocr_spark.plans import extract_job as job
+    from bb_ocr_spark.plans.snapshots import current_snapshot, read_results_as_of
+
+    out = str(tmp_path / "job")
+    full = datagen.generate_df(spark, N, partitions=4)
+    half = full.filter(f"doc_id < '{datagen.doc_id_of(N // 2)}'")
+    run_extract_job(spark, half, out, run_id="r1")
+
+    with monkeypatch.context() as m:
+        _inject_crash(m, job, point)
+        with pytest.raises(_Crash):
+            run_extract_job(spark, full, out, run_id="r2")
+
+    s = run_extract_job(spark, full, out, run_id="r3")
+    assert _rows_and_ids(read_results(spark, out)) == (N, N)
+    cur = current_snapshot(out)
+    assert _rows_and_ids(read_results_as_of(spark, out, cur["snapshot_id"])) == (N, N)
+    assert read_metrics(spark, out).agg(F.sum("n_docs")).collect()[0][0] == N
+    assert s["n_docs"] + s["resumed_skipped"] == N
+    assert cur["n_docs_total"] == N
+
+
+def test_no_listener_leak(spark, tmp_path):
+    """Per-task timing registers nothing on the listener bus."""
+    df = datagen.generate_df(spark, 20, partitions=2)
+    run_extract_job(spark, df, str(tmp_path / "warm"), run_id="w")
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    before = bus.listeners().size()
+    for i in range(2):
+        run_extract_job(spark, df, str(tmp_path / f"job{i}"), run_id="r")
+    assert bus.listeners().size() == before
+
+
+def test_stream_epoch_and_batch_run_share_a_dir(spark, tmp_path):
+    """A streaming epoch (results, no metrics dir) and a batch run commit
+    into one output dir: resume and read_results see both, read_metrics
+    reads the batch run's lineage only."""
+    from pyspark.sql import functions as F
+
+    from bb_ocr_spark.streaming.extract_stream import commit_batch, extract_stream
+
+    out = str(tmp_path / "job")
+    full = datagen.generate_df(spark, N, partitions=4)
+    half = full.filter(f"doc_id < '{datagen.doc_id_of(N // 2)}'")
+    commit_batch(spark, out, extract_stream(half), "stream-000000")
+
+    s = run_extract_job(spark, full, out, run_id="b")
+    assert (s["n_docs"], s["resumed_skipped"]) == (N - N // 2, N // 2)
+    assert _rows_and_ids(read_results(spark, out)) == (N, N)
+    m = read_metrics(spark, out)
+    assert m.agg(F.sum("n_docs")).collect()[0][0] == s["n_docs"]
+    assert {r["run_id"] for r in m.select("run_id").distinct().collect()} == {"b"}

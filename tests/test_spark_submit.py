@@ -1,8 +1,8 @@
 """The north-rule packaging contract, actually driven: package the engine
 with make_pyfiles, launch jobs/extract_submit.py through a REAL
 spark-submit (--py-files, cwd outside the repo so only the zip provides
-the package), then resume with a second submit and assert exactly-once
-extraction."""
+the package), then resume after a lost snapshot commit and once more,
+asserting exactly-once extraction."""
 
 from __future__ import annotations
 
@@ -49,9 +49,14 @@ def test_spark_submit_roundtrip(tmp_path):
         cwd=work,
     )
     assert s1["n_docs"] == 300 and s1["resumed_skipped"] == 0
-    # resume: a second submit over the same corpus must be a no-op
+    # crash before the snapshot commit: r1's results and metrics are on
+    # disk but no manifest lists them, so the next submit redoes all 300
+    shutil.rmtree(os.path.join(outp, "snapshots"))
     s2 = _spark_submit(["--input", inp, "--output", outp, "--run-id", "r2"], cwd=work)
-    assert s2["n_docs"] == 0 and s2["resumed_skipped"] == 300
+    assert s2["n_docs"] == 300 and s2["resumed_skipped"] == 0
+    # resume: a further submit over the same corpus must be a no-op
+    s3 = _spark_submit(["--input", inp, "--output", outp, "--run-id", "r3"], cwd=work)
+    assert s3["n_docs"] == 0 and s3["resumed_skipped"] == 300
 
 
 def _curate_submit(args: list[str], cwd: str) -> dict:

@@ -1833,8 +1833,9 @@ def test_minhash_pin_gate_scale_adaptive(spark, monkeypatch, tmp_path):
     # AQE over-coalescing can starve cores — on a small corpus it is
     # pure overhead (A/B-measured +2.5 s at sf0.1). Results must be
     # identical either way (partitioning-invariant dedup). The fixture
-    # is parquet-backed: a LocalRelation reports Long.MaxValue as its
-    # size estimate, which (correctly, conservatively) always pins.
+    # is parquet-backed because a createDataFrame frame is a LogicalRDD,
+    # whose size estimate is spark.sql.defaultSizeInBytes (Long.MaxValue
+    # by default), which (correctly, conservatively) always pins.
     from bb_ocr_spark.operators import dedup as D
 
     rows = [
@@ -1859,3 +1860,20 @@ def test_minhash_pin_gate_scale_adaptive(spark, monkeypatch, tmp_path):
     assert "REPARTITION_BY_NUM" in pinned_plan
     assert "REPARTITION_BY_NUM" not in free_plan
     assert pinned_rows == free_rows
+
+
+def test_minhash_pin_env_knob_fails_soft(monkeypatch):
+    """A malformed BB_OCR_MINHASH_PIN_BYTES falls back to the 2 MiB
+    default instead of breaking the operators package import."""
+    import importlib
+
+    from bb_ocr_spark.operators import dedup as D
+
+    try:
+        monkeypatch.setenv("BB_OCR_MINHASH_PIN_BYTES", "2MB")
+        assert importlib.reload(D)._MINHASH_PIN_BYTES == 2 << 20
+        monkeypatch.setenv("BB_OCR_MINHASH_PIN_BYTES", "4096")
+        assert importlib.reload(D)._MINHASH_PIN_BYTES == 4096
+    finally:
+        monkeypatch.undo()
+        importlib.reload(D)
