@@ -25,16 +25,25 @@ All regexes are ASCII-only so Java (Spark) and Python `re` semantics agree.
 # alnum_density = (# [a-zA-Z0-9] chars) / (# non-whitespace chars)
 # (alnum, not alpha: ISBN/price/year lines are digit-heavy CONTENT — an
 # alpha-only rule silently drops every metadata-bearing span)
-LINK_TOKEN_RE = r"^(https?://\S*|href=\S*|[|]|[>»]|\[nav\])$"
+# a token is a maximal run of non-[ \t\n\r] chars, so a link token's tail
+# is spelled as that class too: Python's \S stops at \xa0, \x0b and other
+# Unicode whitespace, which Java's token count does not
+LINK_TOKEN_RE = r"^(https?://[^ \t\n\r]*|href=[^ \t\n\r]*|[|]|[>»]|\[nav\])$"
 # same token alternatives as LINK_TOKEN_RE, fenced by whitespace/edge
 # lookarounds so occurrences can be COUNTED in one pass over the raw string
 # (Java regex; Python re can't do variable-width lookbehind — the oracle
-# keeps the split-token form, goldens enforce equivalence)
+# keeps the split-token form, goldens enforce equivalence). The end fence
+# is \z, not $: Java's $ also matches before a final line terminator
+# (\u2028, \u2029, \u0085), so '|\u2028' would count as the link '|'
 LINK_TOKEN_COUNT_RE = (
     r"(?<=^|[ \t\n\r])"
     r"(https?://[^ \t\n\r]*|href=[^ \t\n\r]*|\||[>»]|\[nav\])"
-    r"(?=$|[ \t\n\r])"
+    r"(?=\z|[ \t\n\r])"
 )
+# every alternative above starts with one of these literals, so a text
+# containing none of them has no link token (the classifier's cheap gate;
+# tests/test_fuzz.py pins the derivation)
+LINK_GATE_LITERALS = ("http", "href=", "|", ">", "»", "[nav]")
 LINK_DENSITY_MAX = 0.30
 ALNUM_DENSITY_MIN = 0.50
 # token split regex (ASCII whitespace run)

@@ -5,8 +5,32 @@ whole extraction (classify → strip boilerplate → restore offset order →
 re-emit with media refs interleaved) is expressed with higher-order array
 functions: a NARROW, zero-shuffle, map-only plan. At 10^12 docs this is
 embarrassingly parallel — no groupBy, no skew, scaling efficiency ≈ 1.0 —
-and every expression is JVM-side (whole-stage codegen), no Python in the
-hot path at all.
+and every expression is JVM-side, no Python in the hot path at all. The
+higher-order functions (filter, transform, array_sort) fall back from
+whole-stage codegen, so their lambdas are INTERPRETED once per span: the
+cost is per expression node per span, and the classifier and normalizer
+are written to run as few and as cheap nodes as exact equivalence allows.
+
+Component timing (seed-1 benchmark corpus: 10k docs, 181k text spans;
+4-core VM, local[4]; each row applies one expression to every non-blank
+text span through filter+transform into a noop sink; median of 7 reps
+in each of two fresh JVMs, averaged; seconds):
+
+    scan only, size(spans)                       0.09
+    filter+transform returning the text          0.18   (baseline)
+    ntok  regexp_count [^ \t\n\r]+               0.26
+    nlink regexp_count LINK_TOKEN_COUNT_RE       0.35
+    link gate, 6 x contains                      0.22
+    alnum translate / nonws translate            0.29 / 0.29
+    trim regexp_replace / trim(text, ' \t\n\r')  0.27 / 0.20
+    squeeze regexp_replace                       0.25
+    classifier  (ungated -> gated)               0.70 -> 0.50
+    normalizer  (regex trim -> trim)             0.34 -> 0.26
+    extract_inline, noop sink                    1.01 -> 0.76
+
+90% of the text spans contain no gate literal, so the two regexp_counts
+run on the remaining 10%; the two translates are now the classifier's
+largest cost.
 
 Mega-doc skew costs nothing here: a 10^5-span doc is one wide row processed
 vectorized; there is no hot reduce key. (The salted two-phase path for
@@ -20,6 +44,9 @@ image pages with OCR spans. Rules frozen in config.py, oracle in oracle.py.
 """
 
 from __future__ import annotations
+
+import functools
+import operator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -35,34 +62,43 @@ def is_boilerplate_text_col(text: Column) -> Column:
     """Link-density + alnum-density classifier, identical semantics to
     oracle.is_boilerplate_text. Assumes text is non-null and non-blank.
 
-    Counting is done with regexp_count — no split() token arrays, no
-    regexp_replace string rewrites: the classifier runs on every span of
-    every document, and string-rewrite counting was 18 s of a 20 s
-    extraction at sf0.1.
+    Counting is done with regexp_count and translate() — no split() token
+    arrays, no regexp_replace string rewrites:
       ntok  = # non-ws runs           (== len(split tokens))
       nlink = # tokens matching LINK_TOKEN_RE, via the same alternatives
               fenced by ws/edge lookarounds (token-exact match)
       alnum / nonws = per-char class counts via translate() — a charmap
-              delete, no regex engine at all (fastest of the three forms
-              A/B-measured: string-rewrite 18 s > regexp_count 13.4 s >
-              translate 12.5 s for the full filter at sf0.1/2 cores)
+              delete, no regex engine at all
+    Both counts sit behind a `contains` gate on config.LINK_GATE_LITERALS:
+    a text with none of them has nlink == 0, so its link density is 0 and
+    the test is false without running either regex (most spans). The
+    gate is exact, not a heuristic; tests/test_fuzz.py pins it to the
+    regex alternatives.
     """
     import string  # noqa: PLC0415
 
     alnum_chars = string.ascii_letters + string.digits
+    maybe_link = functools.reduce(
+        operator.or_, (text.contains(lit) for lit in config.LINK_GATE_LITERALS)
+    )
     ntok = F.regexp_count(text, F.lit(r"[^ \t\n\r]+"))
     nlink = F.regexp_count(text, F.lit(config.LINK_TOKEN_COUNT_RE))
     alnum = F.length(text) - F.length(F.translate(text, alnum_chars, ""))
     nonws = F.length(F.translate(text, " \t\n\r", ""))
-    return (nlink.cast("double") / ntok > F.lit(config.LINK_DENSITY_MAX)) | (
+    # And evaluates its right side only when the left one is true
+    link_dense = maybe_link & (
+        nlink.cast("double") / ntok > F.lit(config.LINK_DENSITY_MAX)
+    )
+    return link_dense | (
         alnum.cast("double") / nonws < F.lit(config.ALNUM_DENSITY_MIN)
     )
 
 
 def normalize_text_col(text: Column) -> Column:
-    # ASCII-ws trim via regex: Spark trim() strips only 0x20, Python
-    # str.strip() is unicode-aware — the frozen rule pins the ASCII set
-    trimmed = F.regexp_replace(text, r"^[ \t\n\r]+|[ \t\n\r]+$", "")
+    # trim pinned to the frozen ASCII set: one-argument trim() strips only
+    # 0x20, and a `[ \t\n\r]+$` regex also strips before a final \u2028
+    # (Java's $ matches before a trailing line terminator)
+    trimmed = F.trim(text, F.lit(" \t\n\r"))
     return F.regexp_replace(trimmed, config.WS_SQUEEZE_RE, " ")
 
 

@@ -22,9 +22,11 @@ before the append is invisible to all of them and the next run
 re-extracts its docs; its directories stay behind as orphans.
 
 Lineage is one per-partition aggregate over the committed results files,
-collected in one job; the run's doc count and checksum fold from its
-rows. Per-task wall time is the write stage's task durations from Spark's
-status store (plans/task_metrics.py), next to the run-level clock.
+collected to the driver; the run's doc count and checksum fold from its
+rows, and the driver writes them as the run's metrics file. Per-task wall
+time is the write stage's task durations from Spark's status store
+(plans/task_metrics.py), next to the run-level clock. A fresh run is three
+Spark jobs: the results write and the aggregate's map and result jobs.
 """
 
 from __future__ import annotations
@@ -67,6 +69,26 @@ def _read_committed(
     )
 
 
+def _write_metrics(run_metrics: str, rows: list[dict]) -> None:
+    """The run's lineage rows as one parquet file, written on the driver
+    (a few rows: no Spark job). Like the snapshot manifest, the file is
+    written under a hidden temp name, which Spark readers skip, and
+    os.replace-d into place. run_id comes from the directory on read-back."""
+    import pyarrow as pa  # noqa: PLC0415
+    import pyarrow.parquet as pq  # noqa: PLC0415
+    from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
+    from pyspark.sql.types import DataType  # noqa: PLC0415
+
+    schema = to_arrow_schema(DataType.fromDDL(_METRICS_SCHEMA))
+    os.makedirs(run_metrics)  # a second metrics write for a run_id fails
+    tmp = os.path.join(run_metrics, ".part-00000.parquet")
+    # a few rows: dictionary pages and an embedded Arrow schema (Spark reads
+    # the Parquet one) would only add bytes
+    table = pa.Table.from_pylist(rows, schema)
+    pq.write_table(table, tmp, use_dictionary=False, store_schema=False)
+    os.replace(tmp, os.path.join(run_metrics, "part-00000.parquet"))
+
+
 def completed_doc_ids(spark: SparkSession, output_dir: str) -> DataFrame | None:
     """doc_ids of every run the current snapshot lists (None if none)."""
     snap = current_snapshot(output_dir)
@@ -106,39 +128,35 @@ def run_extract_job(
     with per_task_durations(spark, f"extract-commit-{run_id}") as task_ms:
         extracted.write.mode("errorifexists").parquet(run_results)
 
-    # lineage from the COMMITTED files, light columns only; xor is
+    # lineage from the COMMITTED files, read with the schema just written
+    # (no footer-inference job); size(spans.kind) lets nested-column
+    # pruning decode one leaf instead of every span's text. xor is
     # order-insensitive and cannot overflow
     parts = (
-        spark.read.parquet(run_results)
+        spark.read.schema(extracted.schema)
+        .parquet(run_results)
         .groupBy("part_id")
         .agg(
             F.min("doc_id").alias("doc_id_min"),
             F.max("doc_id").alias("doc_id_max"),
             F.count("*").alias("n_docs"),
-            F.sum(F.size("spans")).alias("n_spans"),
+            F.sum(F.size("spans.kind")).alias("n_spans"),
             F.expr("bit_xor(checksum)").alias("checksum"),
         )
         .collect()
     )
     if parts:  # a run with no new docs has no lineage rows
-        import pyarrow as pa  # noqa: PLC0415
-
         run = {
             "wall_time_ms": int((time.monotonic() - t0) * 1000),
             "committed_at": datetime.datetime.now(datetime.timezone.utc),
         }
-        rows = [
-            {**p.asDict(), **run, "task_wall_ms": task_ms.get(p["part_id"])}
-            for p in parts
-        ]
-        # an Arrow table becomes a JVM-side relation; a list of tuples is
-        # converted by a Python worker, measured at 4x the time on a
-        # 4-core VM. run_id comes from the partition directory on
-        # read-back (a literal column would collide with the inferred one)
-        run_metrics = os.path.join(output_dir, METRICS, f"run_id={run_id}")
-        spark.createDataFrame(pa.Table.from_pylist(rows), _METRICS_SCHEMA).coalesce(
-            1
-        ).write.mode("errorifexists").parquet(run_metrics)
+        _write_metrics(
+            os.path.join(output_dir, METRICS, f"run_id={run_id}"),
+            [
+                {**p.asDict(), **run, "task_wall_ms": task_ms.get(p["part_id"])}
+                for p in parts
+            ],
+        )
 
     n_docs = sum(p["n_docs"] for p in parts)
     run_ck = functools.reduce(operator.xor, (p["checksum"] for p in parts), 0)

@@ -12,6 +12,13 @@ from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
+# the thread-local properties SparkContext.setJobGroup sets
+_GROUP_PROPS = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
+)
+
 
 @contextmanager
 def per_task_durations(spark: SparkSession, group: str):
@@ -19,8 +26,10 @@ def per_task_durations(spark: SparkSession, group: str):
     `group`. After the block, the yielded dict maps partition index ->
     task ms for the result stage of the group's LAST job, which is the
     action's write stage (AQE and broadcasts add earlier jobs). Of
-    duplicate attempts (retry, speculation) the first success wins."""
+    duplicate attempts (retry, speculation) the first success wins. The
+    caller's own job group, if any, is restored afterwards."""
     sc = spark.sparkContext
+    saved = {k: sc.getLocalProperty(k) for k in _GROUP_PROPS}
     sc.setJobGroup(group, f"task-timed job group {group}")
     out: dict[int, int] = {}
     try:
@@ -39,4 +48,5 @@ def per_task_durations(spark: SparkSession, group: str):
             if t.status() == "SUCCESS" and t.index() not in out:
                 out[t.index()] = int(t.duration().get())
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)

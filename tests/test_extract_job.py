@@ -119,13 +119,17 @@ class _Crash(RuntimeError):
 
 def _inject_crash(monkeypatch, job, point: str) -> None:
     """Make the next run_extract_job die at `point` of its commit."""
+    import pyarrow.parquet as pq
     from pyspark.sql.readwriter import DataFrameWriter
 
     write, commit = DataFrameWriter.parquet, job.commit_snapshot
+    write_table = pq.write_table
+
+    def metrics_table(table, where, *a, **kw):
+        write_table(table, where, *a, **kw)
+        raise _Crash(where)  # results dir complete, metrics file not published
 
     def parquet(self, path, *a, **kw):
-        if point == "after_results" and f"{os.sep}metrics{os.sep}" in path:
-            raise _Crash(path)  # results dir complete, metrics write fails
         write(self, path, *a, **kw)
         if point == "mid_results":  # some part files landed, no _SUCCESS
             os.remove(os.path.join(path, "_SUCCESS"))
@@ -141,6 +145,8 @@ def _inject_crash(monkeypatch, job, point: str) -> None:
 
     monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
     monkeypatch.setattr(job, "commit_snapshot", commit_snapshot)
+    if point == "after_results":
+        monkeypatch.setattr(pq, "write_table", metrics_table)
 
 
 @pytest.mark.parametrize(
@@ -204,3 +210,41 @@ def test_stream_epoch_and_batch_run_share_a_dir(spark, tmp_path):
     m = read_metrics(spark, out)
     assert m.agg(F.sum("n_docs")).collect()[0][0] == s["n_docs"]
     assert {r["run_id"] for r in m.select("run_id").distinct().collect()} == {"b"}
+
+
+def test_fresh_run_bookkeeping(spark, tmp_path):
+    """A fresh run is three Spark jobs: the results write and the lineage
+    aggregate's map and result jobs. The driver-written metrics file reads
+    back with the declared schema, and its span counts add up."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import DataType
+
+    from bb_ocr_spark.plans.extract_job import _METRICS_SCHEMA
+    from bb_ocr_spark.plans.task_metrics import _GROUP_PROPS
+
+    out = str(tmp_path / "job")
+    df = datagen.generate_df(spark, N, partitions=4)
+    sc = spark.sparkContext
+    sc.setJobGroup("bookkeeping-probe", "fresh run_extract_job")
+    try:
+        run_extract_job(spark, df, out, run_id="bookkeeping")
+        assert sc.getLocalProperty("spark.jobGroup.id") == "bookkeeping-probe"
+    finally:
+        for k in _GROUP_PROPS:
+            sc.setLocalProperty(k, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    jobs = [
+        j
+        for g in ("bookkeeping-probe", "extract-commit-bookkeeping")
+        for j in sc.statusTracker().getJobIdsForGroup(g)
+    ]
+    assert len(jobs) == 3, jobs
+
+    metrics_dir = os.path.join(out, "metrics", "run_id=bookkeeping")
+    assert os.listdir(metrics_dir) == ["part-00000.parquet"]  # no temp file left
+    m = read_metrics(spark, out)
+    want = DataType.fromDDL(_METRICS_SCHEMA)
+    got = [(f.name, f.dataType) for f in m.schema.fields if f.name != "run_id"]
+    assert got == [(f.name, f.dataType) for f in want.fields]
+    n_spans = read_results(spark, out).agg(F.sum(F.size("spans"))).collect()[0][0]
+    assert m.agg(F.sum("n_spans")).collect()[0][0] == n_spans > 0

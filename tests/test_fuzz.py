@@ -14,7 +14,7 @@ import string
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from bb_ocr_spark import oracle
+from bb_ocr_spark import config, oracle
 from bb_ocr_spark.operators.layout import xy_cut_order
 from bb_ocr_spark.operators.tokenizer import tokenize_html_oracle
 
@@ -83,6 +83,39 @@ def test_xy_cut_is_permutation_and_order_invariant(rs):
     assert [r["text"] for r in xy_cut_order(shuffled)] == [r["text"] for r in out]
 
 
+# each LINK_TOKEN_RE alternative with its shortest tokens; every longer
+# token of an alternative extends one of them
+_LINK_ALTERNATIVES = {
+    r"https?://[^ \t\n\r]*": ("http://", "https://"),
+    r"href=[^ \t\n\r]*": ("href=",),
+    r"[|]": ("|",),
+    r"[>»]": (">", "»"),
+    r"\[nav\]": ("[nav]",),
+}
+
+
+def test_link_gate_covers_every_link_token():
+    """The classifier skips its link count for text that contains none of
+    config.LINK_GATE_LITERALS; that is exact only while every link token
+    contains one of them."""
+    import re
+
+    assert config.LINK_TOKEN_RE == "^(" + "|".join(_LINK_ALTERNATIVES) + ")$"
+    # the Java count regex fences the same alternatives ([|] spelled \|)
+    count_group = config.LINK_TOKEN_COUNT_RE.split(")(")[1]
+    assert count_group == "|".join(_LINK_ALTERNATIVES).replace("[|]", r"\|")
+    for alt, shortest in _LINK_ALTERNATIVES.items():
+        for tok in shortest:
+            assert re.fullmatch(alt, tok) and not re.fullmatch(alt, tok[:-1]), tok
+            assert any(g in tok for g in config.LINK_GATE_LITERALS), tok
+
+
+@given(st.from_regex(config.LINK_TOKEN_RE, fullmatch=True))
+@settings(max_examples=300, deadline=None)
+def test_every_generated_link_token_passes_the_gate(tok):
+    assert any(g in tok for g in config.LINK_GATE_LITERALS), repr(tok)
+
+
 # --------------------------------------------------------------------------
 # one-job Spark-vs-oracle fuzz corpus
 # --------------------------------------------------------------------------
@@ -90,12 +123,22 @@ def test_xy_cut_is_permutation_and_order_invariant(rs):
 
 def _adversarial_corpus() -> list[str]:
     rng = random.Random("fuzz:42")
-    alphabet = string.ascii_letters + string.digits + " \t\n\r|$.,-:/»[]()#@"
+    # Python/Java disagree on which of the last seven are whitespace or
+    # line terminators; the frozen rules only know [ \t\n\r]
+    alphabet = (
+        string.ascii_letters + string.digits + " \t\n\r|$.,-:/»[]()#@"
+        "\x0b\x0c\x1c\x85\xa0\u2028\u2029"
+    )
     corpus = [
         "", " ", "\t\n", "|", "| | |", "[nav]", "https://x", "href=y",
         "a https://x b", "ISBN 978-1-23-45678-9", "$1.50", "...",
         "é ü ß déjà", "a" * 330, "a" * 331, " lead", "trail ", "a  b   c",
         "\r\n\t mixed \t ws \n", "»", "> >", "12345", "x|y",
+        # link token before a final line terminator, non-ASCII space in a
+        # link token, ASCII space before a final line terminator
+        "abc |\u2028", "abc http://x\xa0y", "abc def \u2028",
+        # the link gate fires but no token is a link
+        "xhttp", "a|b", "href", ">>", "[nav]x", "http:/x", "hrefs=1 a",
     ]
     for _ in range(250):
         n = rng.randint(1, 120)
@@ -124,7 +167,8 @@ def test_spark_classifier_matches_oracle_on_fuzz_corpus(spark):
         ).collect()
     }
     for i, t in enumerate(corpus):
-        want_boiler = oracle.is_boilerplate_text(t) if t.strip() else None
+        # blank = ASCII whitespace only ("\u2028" is not blank)
+        want_boiler = oracle.is_boilerplate_text(t) if t.strip(" \t\n\r") else None
         got = rows[i]
         assert got["boiler"] == want_boiler, f"{t!r}: {got['boiler']} != {want_boiler}"
         assert got["norm"] == oracle.normalize_text(t), f"norm mismatch {t!r}"
